@@ -224,6 +224,9 @@ MINHASH_LSH_PAIRS_SQL = _minhash_sql()
 NEARDUP_BANDS = [(1, 9, 17, 25), (33, 41, 49, 57), (5, 13, 21, 29), (37, 45, 53, 61)]
 NEARDUP_THRESHOLD = 0.35
 
+# per-vector L2 norm as the same sequential SQL fold the pair dot uses
+# — hoisted to a column so pair cosines divide by two precomputed norms
+# (one definition for the near-dup verify leg and every NSW stage)
 _NRM = (
     "sqrt(aggregate(transform({c}, x -> cast(x AS double) * cast(x AS double)),"
     " cast(0 AS double), (acc, v) -> acc + v))"
@@ -234,15 +237,16 @@ def _make_dot_f64():
     """Arrow-vectorized float64 dot product over two array columns —
     the bulk-pair replacement for the interpreted lambda-fold dot
     (guide §4.2: hand whole batches to numpy instead of evaluating a
-    higher-order-function expression per pair).  Each element is cast
-    to float64 BEFORE multiplying (same op order as the SQL
-    ``cast(x AS double) * cast(y AS double)`` fold); the float64
-    summation-order difference vs the sequential fold is ~1e-16
-    relative and is absorbed by the round(·, 6) ranking contract every
-    consumer applies — the identical argument (and test gate) the
-    exact blocked-GEMM NSW builder has shipped under since round 4.
-    The ROUNDING itself stays in JVM ``F.round`` so tie semantics are
-    bit-identical to the expression it replaces."""
+    higher-order-function expression per pair).  Bit-identical to the
+    SQL fold ``aggregate(zip_with(a, b, (x, y) -> cast(x AS double) *
+    cast(y AS double)), 0d, (acc, v) -> acc + v)``: each element is
+    cast to float64 before multiplying, and the products are added
+    left to right into a zero accumulator, one vector column per numpy
+    step — the fold's order, so no result depends on rounding to hide
+    a summation-order difference (pinned unrounded by
+    tests/test_ann_recall.py).  The ROUNDING itself stays in JVM
+    ``F.round`` so tie semantics are bit-identical to the expression
+    it replaces."""
 
     from pyspark.sql.types import DoubleType
 
@@ -256,7 +260,10 @@ def _make_dot_f64():
             return pd.Series([], dtype="float64")
         av = np.stack(a.values).astype(np.float64, copy=False)
         bv = np.stack(b.values).astype(np.float64, copy=False)
-        return pd.Series(np.einsum("ij,ij->i", av, bv))
+        acc = np.zeros(len(av))
+        for j in range(av.shape[1]):
+            acc = acc + av[:, j] * bv[:, j]
+        return pd.Series(acc)
 
     return dot_f64
 

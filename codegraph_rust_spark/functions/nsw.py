@@ -1,52 +1,60 @@
-"""Flat NSW (navigable-small-world) ANN with partitioned beam search —
-the structural analog of the reference's flagship HNSW vector index
-(schema/codegraph.surql:815-823, 934-942: ``HNSW ... EFC 150 M 12``).
+"""NSW and layered-HNSW approximate nearest-neighbor search — the
+structural analog of the reference's flagship HNSW vector index
+(schema/codegraph.surql:815-823, 934-942: ``HNSW ... EFC 150 M 12``),
+which answers queries with greedy ef-bounded beam search over
+per-node neighbor lists.
 
-The reference keeps a hierarchical proximity graph and answers queries
-with greedy beam search (ef-bounded best-first).  The Spark-native
-re-expression is a ONE-layer NSW as two DataFrames:
+Here a proximity graph is a DataFrame ``edges(src, dst)``: each
+vector's NSW_M nearest neighbors by cosine, ties broken by dst id.
 
-* **graph build** — ``edges(src, dst)``: each vector's NSW_M nearest
-  neighbors by exact cosine (ties broken by dst id).  TWO builders,
-  same output shape: ``_nsw_edges`` (exact blocked-GEMM brute force —
-  ground truth) and ``_nsw_edges_lsh`` (sign-band LSH buckets + one
+* **graph builders** — ``_nsw_edges`` (exact blocked-GEMM brute force,
+  the ground truth) and ``_nsw_edges_lsh`` (sign-band LSH buckets + one
   NN-descent round — the 10^12-vector path: every stage a bounded key
-  join + per-src top-M window, no O(n^2) anywhere).  Registry entries
-  ``ann_nsw_beam`` / ``ann_nsw_lsh`` expose one beam search per
-  builder, both DuckDB-oracled; recall of the LSH build vs the exact
-  build is gated in tests/test_ann_recall.py.
-* **beam search** — NSW_SEEDS deterministic entry points (smallest
-  md5(vec_id): the same Carter-Wegman-style seeding as the trained-IVF
-  init, no RNG state), then NSW_HOPS rounds of: expand the current
-  beam through the adjacency lists, score the newly reached nodes
-  against the query, keep the best NSW_EF of everything visited.
-  Top-k of the visited set is the answer.
+  join + per-src top-M window, no O(n^2) anywhere).  A layered HNSW
+  index is one exact graph per md5-derived level set
+  (``_hnsw_layer_plan``); its base layer is the exact NSW graph.
+* **the search** — ONE qid-keyed hop loop, ``_beam_visited(en, q,
+  entry, layers, cp)``, behind every entry point.  It scores the entry
+  nodes against every query, then walks ``layers``, a top-to-bottom
+  list of ``(edges, hops, ef)``: each hop broadcasts every query's
+  top-ef beam into that layer's edges (a lookup join), scores the
+  reached nodes and folds them into the visited set.
+  - flat NSW: the NSW_SEEDS smallest-md5 seeds (``_seeds``) and one
+    layer ``(edges, NSW_HOPS, NSW_EF)``;
+  - layered HNSW: the single top-layer entry (``_hnsw_entry``), then
+    narrow-beam upper layers and a wide-beam base layer.
+  A single query is a batch of one: ``ann_nsw_beam``, ``ann_nsw_lsh``
+  and ``ann_hnsw_layered`` are ``nsw_search_batch`` /
+  ``hnsw_search_batch`` on ``[0]``; ``hybrid_nsw_topk`` and
+  ``nsw_insert`` run the same loop.
 
-Scale shape of the QUERY path (the part that runs per search): the
-beam is NSW_EF rows, so every hop is one broadcast join of the beam
-against an src-partitioned edges table — H sequential index lookups of
-~EF·M candidate rows each, never a corpus scan.  That is exactly the
-access pattern HNSW's ef-search does against its neighbor lists, here
-as a lookup join (SurrealDB side: crates/codegraph-vector's HNSW
-search; schema EFC 150 / M 12 — dials NSW_EF/NSW_M mirror them at
-test scale).
+Scale shape of the QUERY path: per hop, one broadcast join of the
+|batch|·ef-row beam against the src-partitioned edges table plus one
+scoring join, whatever the batch size — H sequential index lookups of
+~ef·M candidate rows per query, never a corpus scan.  That is the
+access pattern HNSW's ef-search has against its neighbor lists
+(dials NSW_EF/NSW_M mirror the reference's EFC 150 / M 12 at test
+scale).
 
-Exactness discipline: every cosine is round(·, 6) computed by the same
-sequential fold in both engines; beam truncation and the final top-k
-order by (cosine DESC, vec_id ASC) — total orders, so the DuckDB
-oracle (hop loop unrolled as CTEs, same trick as the trained-IVF
-k-means replay) matches bit-for-bit.
+Exactness discipline: every cosine is round(dot / (‖a‖·‖b‖), 6) with
+the dot product and both norms computed by the same sequential fold
+in both engines; beams and the final top-k order by (cosine DESC,
+vec_id ASC) — total orders, so the DuckDB oracles (each hop loop
+unrolled as CTEs, kept separate from the engine as the reference it
+is checked against) match bit-for-bit.
 """
 
 from __future__ import annotations
 
 import os
+from functools import partial
 
 import numpy as np
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from .common import t
+from .dedup_approx import _NRM, band_sigs, dot_f64
 
 NSW_M = 8      # neighbors kept per node (reference HNSW M 12)
 NSW_EF = 16    # beam width (reference EFC 150; scaled to the test SF)
@@ -73,26 +81,13 @@ NSW_EXACT_MAX_ROWS = int(os.environ.get("NSW_EXACT_MAX_ROWS", "200000"))
 _EXACT_BCASTS: dict[str, list] = {}
 _EXACT_BCASTS_KEEP = 8
 
-_COS = (
-    "round((aggregate(zip_with({a}, {b}, (x, y) -> cast(x AS double) * cast(y AS double)), "
-    "cast(0 AS double), (acc, v) -> acc + v)) / "
-    "((sqrt(aggregate(transform({a}, x -> cast(x AS double) * cast(x AS double)), "
-    "cast(0 AS double), (acc, v) -> acc + v))) * "
-    "(sqrt(aggregate(transform({b}, x -> cast(x AS double) * cast(x AS double)), "
-    "cast(0 AS double), (acc, v) -> acc + v)))), 6)"
-)
-
-# pair cosine with the norms HOISTED to per-vector columns: the same
-# float64 values in the same division, just not recomputed per pair —
-# cuts 2/3 of the graph build's FLOPs without moving a single bit of
-# the result (the SQL oracle hoists identically)
+# pair dot product as a sequential SQL fold; cosines divide it by the
+# per-vector norms hoisted into an ``nrm`` column (``_with_nrm``), so a
+# pair costs one fold instead of three (the SQL oracle hoists
+# identically)
 _DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> cast(x AS double) * cast(y AS double)), "
     "cast(0 AS double), (acc, v) -> acc + v)"
-)
-_NRM = (
-    "sqrt(aggregate(transform({a}, x -> cast(x AS double) * cast(x AS double)), "
-    "cast(0 AS double), (acc, v) -> acc + v))"
 )
 
 
@@ -248,11 +243,7 @@ def _nsw_edges_lsh(e: DataFrame) -> DataFrame:
     pairs across rounds and caps bucket width against band skew; one
     round with rescoring keeps the oracle compact — the plan shape is
     identical.)"""
-    from .dedup_approx import band_sigs
-
-    en = e.select(
-        "vec_id", "embedding", F.expr(_NRM.format(a="embedding")).alias("nrm")
-    )
+    en = _with_nrm(e)
     bands = band_sigs(e)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
@@ -265,8 +256,6 @@ def _nsw_edges_lsh(e: DataFrame) -> DataFrame:
         .select(F.col("a.vec_id").alias("src"), F.col("b.vec_id").alias("dst"))
         .distinct()
     )
-
-    from .dedup_approx import dot_f64
 
     def score_pairs(p: DataFrame) -> DataFrame:
         # bounded key joins fetch both embeddings, then the dot product
@@ -334,74 +323,6 @@ def _nsw_edges_lsh(e: DataFrame) -> DataFrame:
     return top_m(score_pairs(cand2))
 
 
-def _beam_visited(
-    e: DataFrame, edges: DataFrame, cp, q_vec_id: int = 0
-) -> DataFrame:
-    """Visited set (vec_id, cosine) of a deterministic-seed beam
-    search over an (src, dst) proximity graph — shared by the
-    exact-graph, LSH+NN-descent, and hybrid-fusion entries.
-
-    Per-hop plan: broadcast the ≤NSW_EF-row beam into the edges table
-    (lookup join), score only the newly reached dst nodes, re-rank the
-    visited set, truncate to NSW_EF.  Visited-set dedup is a groupBy
-    on vec_id (cosine is a pure function of vec_id, so max() is just
-    pick-one)."""
-    q = e.filter(F.col("vec_id") == q_vec_id).select(
-        F.col("embedding").alias("q_emb")
-    )
-
-    def score(df: DataFrame) -> DataFrame:
-        # cosine(node, query) for a set of vec_ids
-        return (
-            df.join(e, "vec_id")
-            .crossJoin(F.broadcast(q))
-            .select(
-                "vec_id",
-                F.expr(_COS.format(a="embedding", b="q_emb")).alias("cosine"),
-            )
-        )
-
-    seeds = (
-        e.withColumn("h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(NSW_SEEDS)
-        .select("vec_id")
-    )
-    visited = score(seeds)
-    beam = visited.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(NSW_EF)
-    for _ in range(NSW_HOPS):
-        # no .distinct(): the groupBy(vec_id).max below dedups, and
-        # cosine is a pure function of vec_id — dropping the exchange
-        # saves one shuffle per hop for identical visited sets
-        reached = (
-            edges.join(
-                F.broadcast(beam.select(F.col("vec_id").alias("src"))), "src"
-            )
-            .select(F.col("dst").alias("vec_id"))
-        )
-        visited = cp(
-            visited.unionByName(score(reached))
-            .groupBy("vec_id")
-            .agg(F.max("cosine").alias("cosine"))
-        )
-        beam = visited.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(NSW_EF)
-    return visited
-
-
-def _beam_search(
-    e: DataFrame, edges: DataFrame, cp, q_vec_id: int = 0
-) -> DataFrame:
-    """Top-NSW_K (vec_id, cosine, rank) of the beam-search visited set
-    — see ``_beam_visited`` for the per-hop plan."""
-    visited = _beam_visited(e, edges, cp, q_vec_id)
-    w = Window.orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        visited.orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(NSW_K)
-        .withColumn("rank", F.row_number().over(w))
-    )
-
-
 # (applicationId, sf_dir, builder) → materialized edges.  The
 # proximity graph IS the index: the reference builds its HNSW graph at
 # INDEX time and answers every query against it (surql:815-823), so
@@ -437,7 +358,7 @@ def _cached_graph(spark: SparkSession, sf_dir: str, name: str, build) -> DataFra
         # returned frame wraps the checkpointed RDD) without the
         # count() job an eager checkpoint adds; the materialized RDD
         # is reused by every later hop / query in the session
-        _GRAPH_CACHE[k] = build().localCheckpoint(eager=False)
+        _GRAPH_CACHE[k] = _lazy_cp(build())
     return _GRAPH_CACHE[k]
 
 
@@ -455,65 +376,45 @@ def build_graph(spark: SparkSession, sf_dir: str, kind: str) -> int:
     ).count()
 
 
-def _ann_nsw(
-    spark: SparkSession, sf_dir: str, kind: str, _truncate: bool
-) -> DataFrame:
-    """Shared body of the two NSW entries: resolve the ``kind`` graph
-    (cached across queries), then beam-search it.
+# ------------------------------------------------------------ the search
 
-    Per-hop truncation: each hop's plan references the running visited
-    set twice (union leg + beam leg) — without checkpoints the subtrees
-    re-evaluate 2^NSW_HOPS times.  Checkpoints are LAZY (eager=False),
-    which drops the extra count() job eager checkpoints launch per hop;
-    note it does NOT make construction free — under AQE each
-    checkpoint's toRdd still materializes its upstream shuffle stages,
-    so the hop loop executes during construction and only the final
-    stage defers to the first action (measured: ~0.3 s action after
-    construction).  Inherent to driver-side iterative loops; the graph
-    cache amortizes the expensive part across calls.  _truncate=False
-    keeps the whole plan un-checkpointed so the plan-quality test can
-    assert the hop joins broadcast the beam side (and bypasses the
-    graph cache)."""
-    e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
-    def cp(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=False) if _truncate else df
-
-    edges = (
-        _cached_graph(spark, sf_dir, kind, lambda: _GRAPH_BUILDERS[kind](e))
-        if _truncate
-        else _GRAPH_BUILDERS[kind](e)
+def _with_nrm(e: DataFrame) -> DataFrame:
+    """(vec_id, embedding) → (vec_id, embedding, nrm): the corpus side
+    of every scoring join, with each vector's norm computed once."""
+    return e.select(
+        "vec_id", "embedding", F.expr(_NRM.format(c="embedding")).alias("nrm")
     )
-    return _beam_search(e, edges, cp)
 
 
-def ann_nsw_beam(
-    spark: SparkSession, sf_dir: str, _truncate: bool = True
-) -> DataFrame:
-    """NSW beam-search top-k (exact M-NN graph) against the vec_id=0
-    query vector — see ``_ann_nsw`` / ``_beam_search`` for the plan."""
-    return _ann_nsw(spark, sf_dir, "exact", _truncate)
+def _queries(en: DataFrame) -> DataFrame:
+    """Rows of a ``_with_nrm`` frame as queries (qid, q_emb, q_nrm)."""
+    return en.select(
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("q_emb"),
+        F.col("nrm").alias("q_nrm"),
+    )
 
 
-def ann_nsw_lsh(
-    spark: SparkSession, sf_dir: str, _truncate: bool = True
-) -> DataFrame:
-    """NSW beam-search top-k over the LSH + NN-descent graph — the
-    10^12-vector build path (no O(n^2) stage anywhere; see
-    ``_nsw_edges_lsh``).  Query path identical to ``ann_nsw_beam``."""
-    return _ann_nsw(spark, sf_dir, "lsh", _truncate)
-
-
-# ----------------------------------------- batched search (shared hop loop)
+def _seeds(e: DataFrame) -> DataFrame:
+    """The flat search's NSW_SEEDS entry points: smallest md5(vec_id) —
+    the same Carter-Wegman-style seeding as the trained-IVF init, no
+    RNG state, the same for every query."""
+    return (
+        e.withColumn("h", F.md5(F.col("vec_id").cast("string")))
+        .orderBy("h", "vec_id")
+        .limit(NSW_SEEDS)
+        .select("vec_id")
+    )
 
 
 def _score_q(df: DataFrame, against: DataFrame, q: DataFrame) -> DataFrame:
     """(qid, vec_id) → (qid, vec_id, cosine) against a corpus frame
     carrying (vec_id, embedding, nrm) and a broadcast query frame
-    carrying (qid, q_emb, q_nrm).  ONE definition shared by the
-    batched search and the insert path so the 'batch EQUALS single'
-    and 'insert scores identically to build time' contracts can't
-    drift (hoisted-norm cosine — same float ops as the builders)."""
+    carrying (qid, q_emb, q_nrm).  ONE definition shared by the search
+    and the insert path, so an inserted vector scores identically to
+    one present at build time (hoisted-norm cosine — the same float
+    ops as the builders)."""
     return (
         df.join(against, "vec_id")
         .join(F.broadcast(q), "qid")
@@ -529,65 +430,85 @@ def _score_q(df: DataFrame, against: DataFrame, q: DataFrame) -> DataFrame:
     )
 
 
-def _topn_q(df: DataFrame, n: int) -> DataFrame:
-    """Per-qid top-n by (cosine DESC, vec_id ASC) — the one ranking
-    window every qid-keyed stage shares."""
+def _rank_q(df: DataFrame, k: int) -> DataFrame:
+    """Per-qid top-k (qid, vec_id, cosine, rank) by (cosine DESC,
+    vec_id ASC) — the one ranking window every beam and every result
+    shares."""
     wq = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
-        df.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n)
-        .drop("rn")
+        df.withColumn("rank", F.row_number().over(wq).cast("int"))
+        .filter(F.col("rank") <= k)
+        .select("qid", "vec_id", "cosine", "rank")
     )
 
 
-def _batched_visited(
-    en_corpus: DataFrame, edges: DataFrame, q: DataFrame, cp
+def _lazy_cp(df: DataFrame) -> DataFrame:
+    return df.localCheckpoint(eager=False)
+
+
+def _beam_visited(
+    en: DataFrame,
+    q: DataFrame,
+    entry: DataFrame,
+    layers: list[tuple[DataFrame, int, int]],
+    cp,
 ) -> DataFrame:
-    """(qid, vec_id, cosine) visited set of a beam search run for MANY
-    query vectors at once — the single-query hop loop of
-    ``_beam_search`` with a qid column.  Per hop: ONE join of the
-    |queries|·EF-row beam against the src-partitioned edges table plus
-    ONE scoring join, whatever the batch size — the amortization that
-    makes vector search a query SERVICE rather than a job per query
-    (same motive as the BM25 ``topk_batch`` path).
+    """(qid, vec_id, cosine) visited set of a beam search run for every
+    query in ``q`` at once — THE hop loop of this module.
 
-    ``en_corpus`` must carry (vec_id, embedding, nrm); ``q`` carries
-    (qid, q_emb, q_nrm).  Seeds are the corpus-global deterministic
-    entry points (smallest md5(vec_id)) — identical to the
-    single-query path, so for any one qid the batched result EQUALS
-    the single-query result (pinned by test)."""
+    ``en`` is the corpus (vec_id, embedding, nrm), ``q`` the queries
+    (qid, q_emb, q_nrm) and ``entry`` the (vec_id) nodes every query
+    starts from.  ``layers`` lists (edges, hops, ef) from the top layer
+    down: each hop broadcasts every query's top-ef beam into that
+    layer's src-partitioned edges (a lookup join), scores the reached
+    nodes and folds them into the visited set.  Per hop that is ONE
+    beam join plus ONE scoring join whatever the batch size — the
+    amortization that makes vector search a query SERVICE rather than
+    a job per query (same motive as the BM25 ``topk_batch`` path).
+    Nothing couples two qids, so a query's result does not depend on
+    which batch it rides in (pinned by test).
 
-    def score(df: DataFrame) -> DataFrame:
-        return _score_q(df, en_corpus, q)
-
-    def topn(df: DataFrame, n: int) -> DataFrame:
-        return _topn_q(df, n)
-
-    seeds = (
-        en_corpus.withColumn("h", F.md5(F.col("vec_id").cast("string")))
-        .orderBy("h", "vec_id")
-        .limit(NSW_SEEDS)
-        .select("vec_id")
-    )
-    visited = score(q.select("qid").crossJoin(F.broadcast(seeds)))
-    beam = topn(visited, NSW_EF)
-    for _ in range(NSW_HOPS):
-        # no .distinct(): groupBy(qid, vec_id).max below dedups —
-        # saves one shuffle per hop for identical visited sets
-        reached = (
-            edges.join(
-                F.broadcast(beam.select("qid", F.col("vec_id").alias("src"))),
-                "src",
+    ``cp`` truncates the visited set's lineage after each hop.  Each
+    hop's plan references the running visited set twice (union leg +
+    beam leg), so without it the subtrees re-evaluate 2^hops times;
+    the engine passes a LAZY local checkpoint (``_lazy_cp``: no extra
+    count() job per hop, though under AQE each checkpoint still
+    materializes its upstream shuffle stages at construction), and the
+    plan-quality tests pass the identity to inspect the whole plan."""
+    visited = _score_q(q.select("qid").crossJoin(F.broadcast(entry)), en, q)
+    for edges, hops, ef in layers:
+        for _ in range(hops):
+            beam = _rank_q(visited, ef).select("qid", F.col("vec_id").alias("src"))
+            # no .distinct(): groupBy(qid, vec_id).max below dedups —
+            # cosine is a pure function of (qid, vec_id), so max() just
+            # picks one, and the dedup shuffle per hop is saved
+            reached = edges.join(F.broadcast(beam), "src").select(
+                "qid", F.col("dst").alias("vec_id")
             )
-            .select("qid", F.col("dst").alias("vec_id"))
-        )
-        visited = cp(
-            visited.unionByName(score(reached))
-            .groupBy("qid", "vec_id")
-            .agg(F.max("cosine").alias("cosine"))
-        )
-        beam = topn(visited, NSW_EF)
+            visited = cp(
+                visited.unionByName(_score_q(reached, en, q))
+                .groupBy("qid", "vec_id")
+                .agg(F.max("cosine").alias("cosine"))
+            )
     return visited
+
+
+def _one(batch: DataFrame) -> DataFrame:
+    """A batch-of-one result in the single-query shape (vec_id, cosine,
+    rank), ordered by rank."""
+    return batch.select("vec_id", "cosine", "rank").orderBy("rank")
+
+
+def _nsw_visited(
+    spark: SparkSession, sf_dir: str, qids: list[int], kind: str
+) -> DataFrame:
+    """Flat-NSW visited set for ``qids`` over the session-cached
+    ``kind`` graph."""
+    e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    en = _with_nrm(e)
+    edges = _cached_graph(spark, sf_dir, kind, lambda: _GRAPH_BUILDERS[kind](e))
+    q = _queries(en.filter(F.col("vec_id").isin(qids)))
+    return _beam_visited(en, q, _seeds(e), [(edges, NSW_HOPS, NSW_EF)], _lazy_cp)
 
 
 def nsw_search_batch(
@@ -599,31 +520,22 @@ def nsw_search_batch(
 ) -> DataFrame:
     """Per-query top-k (qid, vec_id, cosine, rank) for a BATCH of
     query vectors (taken from the embeddings table by id) through the
-    session-cached ``kind`` proximity graph — the vector-side query
-    service.  One Spark job serves the whole batch; per-qid results
-    are identical to running ``ann_nsw_beam``-style single searches
-    (gated by tests/test_nsw_incremental.py)."""
-    e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    en = e.select(
-        "vec_id", "embedding", F.expr(_NRM.format(a="embedding")).alias("nrm")
-    )
-    q = en.filter(F.col("vec_id").isin(qids)).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    edges = _cached_graph(
-        spark, sf_dir, kind, lambda: _GRAPH_BUILDERS[kind](e)
-    )
-    visited = _batched_visited(
-        en, edges, q, lambda df: df.localCheckpoint(eager=False)
-    )
-    wq = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        visited.withColumn("rank", F.row_number().over(wq).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "vec_id", "cosine", "rank")
-    )
+    session-cached ``kind`` ∈ {exact, lsh} proximity graph — the
+    vector-side query service.  One Spark job serves the whole batch."""
+    return _rank_q(_nsw_visited(spark, sf_dir, qids, kind), k)
+
+
+def ann_nsw_beam(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """NSW beam-search top-k over the exact M-NN graph for the vec_id=0
+    query: ``nsw_search_batch`` on [0]."""
+    return _one(nsw_search_batch(spark, sf_dir, [0], kind="exact"))
+
+
+def ann_nsw_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """NSW beam-search top-k over the LSH + NN-descent graph — the
+    10^12-vector build path (no O(n^2) stage anywhere; see
+    ``_nsw_edges_lsh``).  Query path identical to ``ann_nsw_beam``."""
+    return _one(nsw_search_batch(spark, sf_dir, [0], kind="lsh"))
 
 
 def nsw_search_batch_cached(
@@ -677,10 +589,11 @@ def nsw_insert(
 
     Plan shape, all stages bounded by |batch| — never a corpus scan:
 
-    1. BATCHED beam search of the old graph for all new vectors at
-       once (the single-query hop loop of ``_beam_search`` with a qid
-       column: per hop, one join of the |batch|·EF-row beam against
-       the src-partitioned edges table + one scoring join).
+    1. The flat search (``_beam_visited`` with the ``_seeds`` entry
+       and one (edges, NSW_HOPS, NSW_EF) layer) of the OLD graph, every
+       new vector one qid: per hop, one join of the |batch|·EF-row
+       beam against the src-partitioned edges table + one scoring
+       join.
     2. New×new candidates via the shared sign-band LSH buckets
        (``band_sigs`` — same-batch vectors must see each other, as
        sequential HNSW inserts do), verified by exact cosine.
@@ -702,29 +615,18 @@ def nsw_insert(
     seeds, so an outlier new vector sharing no LSH bucket would get no
     candidates and silently vanish from the adjacency set.  Bootstrap
     with the batch builders (``build_graph``); insert increments."""
-    from .dedup_approx import band_sigs
-
     if e_old.limit(1).count() == 0:
         raise ValueError(
             "nsw_insert needs a non-empty base graph — bootstrap with "
             "_nsw_edges/_nsw_edges_lsh (build_graph), then insert"
         )
 
-    def with_nrm(df: DataFrame) -> DataFrame:
-        return df.select(
-            "vec_id", "embedding", F.expr(_NRM.format(a="embedding")).alias("nrm")
-        )
+    en_old, en_new = _with_nrm(e_old), _with_nrm(e_new)
+    q = _queries(en_new)
 
-    en_old, en_new = with_nrm(e_old), with_nrm(e_new)
-    q = en_new.select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-
-    # 1. batched beam search of the OLD graph (shared hop loop)
-    visited = _batched_visited(
-        en_old, edges_old, q, lambda df: df.localCheckpoint(eager=False)
+    # 1. beam search of the OLD graph (the shared hop loop)
+    visited = _beam_visited(
+        en_old, q, _seeds(e_old), [(edges_old, NSW_HOPS, NSW_EF)], _lazy_cp
     )
 
     # 2. same-batch candidates via the shared LSH bands
@@ -747,7 +649,7 @@ def nsw_insert(
         .groupBy("qid", "vec_id")
         .agg(F.max("cosine").alias("cosine"))
     )
-    fwd = _topn_q(cand, NSW_M).select(
+    fwd = _rank_q(cand, NSW_M).select(
         F.col("qid").alias("src"), F.col("vec_id").alias("dst"), F.col("cosine").alias("cos")
     )
     rev = fwd.select(
@@ -1087,78 +989,53 @@ def _hnsw_entry(e: DataFrame) -> DataFrame:
     )
 
 
+def _hnsw_layer_plan(e: DataFrame, graph) -> list[tuple[DataFrame, int, int]]:
+    """Top→bottom (edges, hops, ef) layers of the HNSW descent — ONE
+    definition shared by the search and ``build_hnsw_graphs``.
+    ``graph(name, build)`` returns layer ``name``'s edges: the session
+    cache (``_cached_graph``) in the engine, a plain ``build()`` where
+    a test inspects the uncached plan.  Layer 0 is the ``exact`` NSW
+    graph, so building one warms the other."""
+    upper = [
+        (
+            graph(f"hnsw_l{lvl}", lambda m=_hnsw_layer_members(e, lvl): _nsw_edges(m)),
+            HNSW_HOPS_UPPER,
+            HNSW_EF_UPPER,
+        )
+        for lvl in range(HNSW_MAX_LEVEL, 0, -1)
+    ]
+    return upper + [(graph("exact", lambda: _nsw_edges(e)), HNSW_HOPS_L0, NSW_EF)]
+
+
 def build_hnsw_graphs(spark: SparkSession, sf_dir: str) -> dict[int, int]:
     """Force-build (and session-cache) all HNSW layer graphs; returns
-    {level: edge_count}.  Layer 0 shares the ``exact`` cache entry
-    with ann_nsw_beam — building one warms the other."""
+    {level: edge_count}."""
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    counts = {}
-    for lvl in range(HNSW_MAX_LEVEL, 0, -1):
-        members = _hnsw_layer_members(e, lvl)
-        counts[lvl] = _cached_graph(
-            spark, sf_dir, f"hnsw_l{lvl}", lambda m=members: _nsw_edges(m)
-        ).count()
-    counts[0] = _cached_graph(
-        spark, sf_dir, "exact", lambda: _nsw_edges(e)
-    ).count()
-    return counts
+    layers = _hnsw_layer_plan(e, partial(_cached_graph, spark, sf_dir))
+    return {
+        HNSW_MAX_LEVEL - i: edges.count() for i, (edges, _, _) in enumerate(layers)
+    }
 
 
-def ann_hnsw_layered(
-    spark: SparkSession, sf_dir: str, _truncate: bool = True
+def hnsw_search_batch(
+    spark: SparkSession, sf_dir: str, qids: list[int], k: int = NSW_K
 ) -> DataFrame:
-    """Layered-HNSW top-k against the vec_id=0 query: single-seed
-    top-layer entry, greedy narrow-beam descent, wide-beam base-layer
-    finish — (vec_id, cosine, rank), same contract as ann_nsw_beam."""
+    """Per-query top-k (qid, vec_id, cosine, rank) for a BATCH of query
+    vectors through the layered-HNSW index: single-seed top-layer
+    entry, greedy narrow-beam descent, wide-beam base-layer finish —
+    one qid-keyed descent serves the whole batch, the layered twin of
+    ``nsw_search_batch``."""
     e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    en = _with_nrm(e)
+    layers = _hnsw_layer_plan(e, partial(_cached_graph, spark, sf_dir))
+    q = _queries(en.filter(F.col("vec_id").isin(qids)))
+    return _rank_q(_beam_visited(en, q, _hnsw_entry(e), layers, _lazy_cp), k)
 
-    def cp(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=False) if _truncate else df
 
-    if _truncate:
-        layers = _hnsw_layer_plan(spark, sf_dir, e)
-    else:  # plan-quality tests: uncached, un-truncated lineage
-        layers = [
-            (_nsw_edges(_hnsw_layer_members(e, lvl)), HNSW_HOPS_UPPER, HNSW_EF_UPPER)
-            for lvl in range(HNSW_MAX_LEVEL, 0, -1)
-        ] + [(_nsw_edges(e), HNSW_HOPS_L0, NSW_EF)]
-
-    q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q_emb"))
-
-    def score(df: DataFrame) -> DataFrame:
-        return (
-            df.join(e, "vec_id")
-            .crossJoin(F.broadcast(q))
-            .select(
-                "vec_id",
-                F.expr(_COS.format(a="embedding", b="q_emb")).alias("cosine"),
-            )
-        )
-
-    visited = score(_hnsw_entry(e))
-    for edges, hops, ef in layers:
-        beam = visited.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(ef)
-        for _ in range(hops):
-            reached = (
-                edges.join(
-                    F.broadcast(beam.select(F.col("vec_id").alias("src"))),
-                    "src",
-                )
-                .select(F.col("dst").alias("vec_id"))
-                .distinct()
-            )
-            visited = cp(
-                visited.unionByName(score(reached))
-                .groupBy("vec_id")
-                .agg(F.max("cosine").alias("cosine"))
-            )
-            beam = visited.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(ef)
-    w = Window.orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        visited.orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(NSW_K)
-        .withColumn("rank", F.row_number().over(w))
-    )
+def ann_hnsw_layered(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Layered-HNSW top-k for the vec_id=0 query: ``hnsw_search_batch``
+    on [0] — (vec_id, cosine, rank), same contract as ann_nsw_beam."""
+    return _one(hnsw_search_batch(spark, sf_dir, [0]))
 
 
 def _hnsw_sql() -> str:
@@ -1237,79 +1114,6 @@ ANN_HNSW_LAYERED_SQL = _hnsw_sql()
 
 
 # --------------------------------------- batched layered-HNSW service
-
-def _hnsw_layer_plan(
-    spark: SparkSession, sf_dir: str, e: DataFrame
-) -> list[tuple[DataFrame, int, int]]:
-    """Top→bottom (edges, hops, beam_ef) plan over the session-cached
-    layer graphs — ONE definition shared by the single-query and
-    batched layered searches so their descent schedules can't drift."""
-    layers: list[tuple[DataFrame, int, int]] = []
-    for lvl in range(HNSW_MAX_LEVEL, 0, -1):
-        members = _hnsw_layer_members(e, lvl)
-        layers.append((
-            _cached_graph(spark, sf_dir, f"hnsw_l{lvl}", lambda m=members: _nsw_edges(m)),
-            HNSW_HOPS_UPPER,
-            HNSW_EF_UPPER,
-        ))
-    layers.append((
-        _cached_graph(spark, sf_dir, "exact", lambda: _nsw_edges(e)),
-        HNSW_HOPS_L0,
-        NSW_EF,
-    ))
-    return layers
-
-
-def hnsw_search_batch(
-    spark: SparkSession, sf_dir: str, qids: list[int], k: int = NSW_K
-) -> DataFrame:
-    """Per-query top-k for a BATCH of query vectors through the
-    layered-HNSW index: ONE qid-keyed descent serves the whole batch
-    (per layer, per hop: one join of the |batch|·EF beam against that
-    layer's edges + one scoring join) — the layered twin of
-    ``nsw_search_batch``, completing the index family's service role.
-    Entry point is the SAME single top-layer node as the single-query
-    path, so per-qid results equal ``ann_hnsw_layered`` (test-pinned
-    for qid 0)."""
-    e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    en = e.select(
-        "vec_id", "embedding", F.expr(_NRM.format(a="embedding")).alias("nrm")
-    )
-    q = en.filter(F.col("vec_id").isin(qids)).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cp = lambda df: df.localCheckpoint(eager=False)  # noqa: E731
-
-    visited = _score_q(
-        q.select("qid").crossJoin(F.broadcast(_hnsw_entry(e))), en, q
-    )
-    for edges, hops, ef in _hnsw_layer_plan(spark, sf_dir, e):
-        beam = _topn_q(visited, ef)
-        for _ in range(hops):
-            # no .distinct(): groupBy(qid, vec_id).max below dedups —
-            # saves one shuffle per hop for identical visited sets
-            reached = (
-                edges.join(
-                    F.broadcast(beam.select("qid", F.col("vec_id").alias("src"))),
-                    "src",
-                )
-                .select("qid", F.col("dst").alias("vec_id"))
-            )
-            visited = cp(
-                visited.unionByName(_score_q(reached, en, q))
-                .groupBy("qid", "vec_id")
-                .agg(F.max("cosine").alias("cosine"))
-            )
-            beam = _topn_q(visited, ef)
-    wq = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        visited.withColumn("rank", F.row_number().over(wq).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select("qid", "vec_id", "cosine", "rank")
-    )
-
 
 def ann_hnsw_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry: the fixed NSW_BATCH_QIDS batch through the
@@ -1423,20 +1227,8 @@ def hybrid_nsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     treats docs outside the ANN result."""
     from .indexed import bm25_index_topk
 
-    e = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    edges = _cached_graph(
-        spark, sf_dir, "lsh", lambda: _GRAPH_BUILDERS["lsh"](e)
-    )
-    visited = _beam_visited(
-        e, edges, lambda df: df.localCheckpoint(eager=False)
-    )
-    vec = (
-        visited.orderBy(F.desc("cosine"), F.asc("vec_id"))
-        .limit(10)
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.col("cosine").alias("vector_score"),
-        )
+    vec = _rank_q(_nsw_visited(spark, sf_dir, [0], "lsh"), 10).select(
+        F.col("vec_id").alias("doc_id"), F.col("cosine").alias("vector_score")
     )
     text = bm25_index_topk(spark, sf_dir).select(
         "doc_id", F.col("score").alias("text_score")

@@ -181,23 +181,75 @@ def test_round6_half_up_matches_duckdb_round():
     assert list(ours) == theirs, list(zip(vals, ours, theirs))
 
 
+def test_dot_f64_equals_sql_fold_unrounded(spark):
+    """The vectorized ``dot_f64`` must equal Spark's sequential SQL fold
+    (``nsw._DOT``) EXACTLY, before any rounding, so no ranking depends
+    on round(·, 6) hiding a summation-order difference.  Inputs: 30,000
+    real sf0.01 pairs, plus seeded float64 pairs whose cosine is
+    snapped next to a 7-decimal half (k·1e-6 + 5e-7), where a
+    last-bit difference in the dot would flip the rounded cosine."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from codegraph_rust_spark.functions.common import t
+    from codegraph_rust_spark.functions.dedup_approx import dot_f64
+    from codegraph_rust_spark.functions.nsw import _DOT
+
+    def mismatches(pairs):
+        rows = pairs.select(
+            dot_f64("a", "b").alias("vec"),
+            F.expr(_DOT.format(a="a", b="b")).alias("fold"),
+        ).collect()
+        assert rows
+        return [(r["vec"], r["fold"]) for r in rows if r["vec"] != r["fold"]]
+
+    e = t(spark, SF, "embeddings")
+    real = (
+        e.select(F.col("embedding").alias("a"))
+        .crossJoin(e.filter(F.col("vec_id") < 60).select(F.col("embedding").alias("b")))
+    )
+    assert real.count() >= 30_000
+    assert mismatches(real) == []
+
+    rng = np.random.default_rng(20261017)
+    snapped, off = [], 0.0
+    for _ in range(2_000):
+        x, u = rng.standard_normal((2, 64))
+        x /= np.linalg.norm(x)
+        u -= (u @ x) * x
+        u /= np.linalg.norm(u)
+        c = int(rng.integers(-999_999, 999_999)) * 1e-6 + 5e-7
+        y = (c * x + np.sqrt(1 - c * c) * u) * rng.uniform(0.5, 2.0)
+        snapped.append((x.tolist(), y.tolist()))
+        off = max(off, abs(x @ y / np.linalg.norm(y) - c))
+    # the snap really lands next to the rounding boundary
+    assert off < 1e-12
+    seeded = spark.createDataFrame(snapped, "a array<double>, b array<double>")
+    assert mismatches(seeded) == []
+
+
 def test_hnsw_batched_search_equals_single_query(spark):
-    """The batched layered descent must be per-qid IDENTICAL to the
-    single-query layered search (same entry point, same per-layer hop
-    schedule via the shared _hnsw_layer_plan) — the contract that lets
-    the service answer batches without changing results."""
+    """Batch membership must not change results: for each qid of the
+    3-query ``ann_hnsw_batch`` batch, its rows EQUAL that qid's
+    batch-of-one layered descent (the form ``ann_hnsw_layered`` takes)
+    — the contract that lets the service answer batches without
+    changing results."""
     from codegraph_rust_spark.functions import nsw
 
-    single = sorted(
-        (r["vec_id"], r["rank"], r["cosine"])
-        for r in nsw.ann_hnsw_layered(spark, SF).collect()
-    )
-    batched = sorted(
-        (r["vec_id"], r["rank"], r["cosine"])
-        for r in nsw.ann_hnsw_batch(spark, SF).collect()
-        if r["qid"] == 0
-    )
-    assert batched == single
+    def by_qid(rows, qid):
+        return sorted(
+            [(r["vec_id"], r["cosine"], r["rank"]) for r in rows if r["qid"] == qid],
+            key=lambda x: x[2],
+        )
+
+    rows = nsw.ann_hnsw_batch(spark, SF).collect()
+    for qid in nsw.NSW_BATCH_QIDS:
+        mine = by_qid(rows, qid)
+        alone = by_qid(nsw.hnsw_search_batch(spark, SF, [qid]).collect(), qid)
+        assert mine == alone, qid
+        # a full top-k, ranked 1..k, that finds itself first
+        assert [rk for _, _, rk in mine] == list(range(1, nsw.NSW_K + 1))
+        assert mine[0][0] == qid, qid
 
 
 def test_hnsw_entry_falls_back_when_top_layer_empty(spark, tmp_path):

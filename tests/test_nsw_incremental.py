@@ -75,15 +75,13 @@ def test_gemm_build_matches_sql_fold(spark):
     from codegraph_rust_spark.functions.common import t
     from codegraph_rust_spark.functions.nsw import (
         _DOT,
-        _NRM,
         NSW_M,
         _nsw_edges,
+        _with_nrm,
     )
 
     e = t(spark, SF, "embeddings").select("vec_id", "embedding")
-    en = e.select(
-        "vec_id", "embedding", F.expr(_NRM.format(a="embedding")).alias("nrm")
-    )
+    en = _with_nrm(e)
     a = en.select(
         F.col("vec_id").alias("src"),
         F.col("embedding").alias("a_emb"),
@@ -130,34 +128,30 @@ def test_nsw_insert_rejects_empty_base(spark):
 
 
 def test_nsw_search_batch_matches_single_query(spark):
-    """The batched query service must return, per qid, EXACTLY the
-    single-query beam-search result — same seeds, same hop structure,
-    same tie-breaks; batching only amortizes the per-hop joins."""
-    from codegraph_rust_spark.functions.nsw import (
-        ann_nsw_beam,
-        nsw_search_batch,
-    )
+    """Batch membership must not change results: for each qid of a
+    3-query batch, its rows EQUAL that qid's batch-of-one result — the
+    form every single-query entry (ann_nsw_beam, ann_nsw_lsh) takes.
+    Same seeds, same hop structure, same tie-breaks; batching only
+    amortizes the per-hop joins.  Checked over both graph builders."""
+    from codegraph_rust_spark.functions.nsw import nsw_search_batch
 
-    single = [
-        (r["vec_id"], r["cosine"], r["rank"])
-        for r in ann_nsw_beam(spark, SF).collect()
-    ]
-    batch = nsw_search_batch(spark, SF, qids=[0, 5, 10], kind="exact")
-    rows = batch.collect()
-    got0 = sorted(
-        [(r["vec_id"], r["cosine"], r["rank"]) for r in rows if r["qid"] == 0],
-        key=lambda x: x[2],
-    )
-    assert got0 == single
-    # every query in the batch got a full top-k, ranked 1..k, and
-    # finds itself first (its own vector is in the corpus)
-    for qid in (0, 5, 10):
-        mine = sorted(
-            [(r["vec_id"], r["rank"]) for r in rows if r["qid"] == qid],
-            key=lambda x: x[1],
+    def by_qid(rows, qid):
+        return sorted(
+            [(r["vec_id"], r["cosine"], r["rank"]) for r in rows if r["qid"] == qid],
+            key=lambda x: x[2],
         )
-        assert [rk for _, rk in mine] == list(range(1, len(mine) + 1))
-        assert mine[0][0] == qid
+
+    qids = [0, 5, 10]
+    for kind in ("exact", "lsh"):
+        rows = nsw_search_batch(spark, SF, qids=qids, kind=kind).collect()
+        for qid in qids:
+            mine = by_qid(rows, qid)
+            alone = nsw_search_batch(spark, SF, qids=[qid], kind=kind).collect()
+            assert mine == by_qid(alone, qid), (kind, qid)
+            # a full top-k, ranked 1..k, that finds itself first (its
+            # own vector is in the corpus)
+            assert [rk for _, _, rk in mine] == list(range(1, len(mine) + 1))
+            assert mine[0][0] == qid, (kind, qid)
 
 
 def test_nsw_insert_search_recall(spark):
@@ -166,9 +160,16 @@ def test_nsw_insert_search_recall(spark):
     INSERTED vectors — the hard case: its links were made by the
     insert path, not the batch builder)."""
     from codegraph_rust_spark.functions.nsw import (
+        NSW_EF,
+        NSW_HOPS,
         NSW_K,
-        _beam_search,
+        _beam_visited,
+        _lazy_cp,
         _nsw_edges,
+        _queries,
+        _rank_q,
+        _seeds,
+        _with_nrm,
         nsw_insert,
     )
     from codegraph_rust_spark.functions.textops import knn_bruteforce
@@ -176,11 +177,15 @@ def test_nsw_insert_search_recall(spark):
     e, e_old, e_new = _split(spark)
     edges_old = _nsw_edges(e_old).localCheckpoint()
     spliced = nsw_insert(e_old, edges_old, e_new).localCheckpoint()
+    en = _with_nrm(e)
+    q = _queries(en.filter(F.col("vec_id") == 0))
 
-    def cp(df):
-        return df.localCheckpoint(eager=False)
+    def search(edges):
+        layers = [(edges, NSW_HOPS, NSW_EF)]
+        visited = _beam_visited(en, q, _seeds(e), layers, _lazy_cp)
+        return [r["vec_id"] for r in _rank_q(visited, NSW_K).collect()]
 
-    got = [r["vec_id"] for r in _beam_search(e, spliced, cp).collect()]
+    got = search(spliced)
     exact = [r["vec_id"] for r in knn_bruteforce(spark, SF).collect()][:NSW_K]
     recall = len(set(got) & set(exact)) / float(NSW_K)
     # measured 1.0 on this deterministic table; the gate allows one
@@ -189,6 +194,6 @@ def test_nsw_insert_search_recall(spark):
     # the from-scratch exact graph on the FULL table is the upper
     # bound; spliced recall must not fall more than one hit behind
     full = _nsw_edges(e).localCheckpoint()
-    got_full = [r["vec_id"] for r in _beam_search(e, full, cp).collect()]
+    got_full = search(full)
     recall_full = len(set(got_full) & set(exact)) / float(NSW_K)
     assert recall >= recall_full - 0.2, (recall, recall_full)

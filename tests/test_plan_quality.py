@@ -81,14 +81,42 @@ def test_embedder_is_one_shuffle_with_partial_aggs(spark):
     assert "HashAggregate" in p
 
 
-def test_nsw_beam_hops_are_broadcast_lookups(spark):
-    """Every beam-search hop must join the ≤NSW_EF-row beam into the
-    edges table as a broadcast lookup — the HNSW ef-search access
-    pattern.  A sort-merge join here would shuffle the whole adjacency
-    table per hop, which is the plan that dies at 10^12 vectors."""
-    from codegraph_rust_spark.functions.nsw import ann_nsw_beam
+def _search_inputs(spark, qids):
+    """(e, en, q): the corpus and query frames the shared hop loop reads."""
+    from pyspark.sql import functions as F
 
-    p = _plan(ann_nsw_beam(spark, SF, _truncate=False))
+    from codegraph_rust_spark.functions.common import t
+    from codegraph_rust_spark.functions.nsw import _queries, _with_nrm
+
+    e = t(spark, SF, "embeddings").select("vec_id", "embedding")
+    en = _with_nrm(e)
+    return e, en, _queries(en.filter(F.col("vec_id").isin(qids)))
+
+
+def _flat_hop_plan(spark, qids):
+    """Plan of the shared flat hop loop (identity ``cp``, so the whole
+    un-truncated plan is visible) for the queries ``qids``."""
+    from codegraph_rust_spark.functions.nsw import (
+        NSW_EF,
+        NSW_HOPS,
+        _beam_visited,
+        _nsw_edges,
+        _seeds,
+    )
+
+    e, en, q = _search_inputs(spark, qids)
+    layers = [(_nsw_edges(e), NSW_HOPS, NSW_EF)]
+    return _plan(_beam_visited(en, q, _seeds(e), layers, lambda d: d))
+
+
+def test_nsw_beam_hops_are_broadcast_lookups(spark):
+    """Every flat beam-search hop must join the ≤NSW_EF-row beam into
+    the edges table as a broadcast lookup — the HNSW ef-search access
+    pattern.  A sort-merge join here would shuffle the whole adjacency
+    table per hop, which is the plan that dies at 10^12 vectors.
+    Checked for a single query — every single-query entry is a batch
+    of one on the shared hop loop."""
+    p = _flat_hop_plan(spark, [0])
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
 
@@ -97,27 +125,9 @@ def test_nsw_batched_search_hops_are_broadcast_lookups(spark):
     """The batched query service must keep the same hop plan as the
     single-query path: the (|batch|·EF)-row beam broadcasts into the
     src-partitioned edges table, never a shuffle of the adjacency
-    lists.  (The 8-row seed fan-out is a broadcast nested loop by
+    lists.  (The seed fan-out is a broadcast nested loop by
     construction — bounded, allowed.)"""
-    from pyspark.sql import functions as F
-
-    from codegraph_rust_spark.functions.common import t
-    from codegraph_rust_spark.functions.nsw import (
-        _NRM,
-        _batched_visited,
-        _nsw_edges,
-    )
-
-    e = t(spark, SF, "embeddings").select("vec_id", "embedding")
-    en = e.select(
-        "vec_id", "embedding", F.expr(_NRM.format(a="embedding")).alias("nrm")
-    )
-    q = en.filter(F.col("vec_id") < 3).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    p = _plan(_batched_visited(en, _nsw_edges(e), q, lambda d: d))
+    p = _flat_hop_plan(spark, [0, 1, 2])
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
 
@@ -140,9 +150,15 @@ def test_hnsw_layered_hops_are_broadcast_lookups(spark):
     """The layered descent must keep the flat path's hop plan at every
     layer: the ≤EF-row beam broadcasts into that layer's edges table —
     never a shuffle of adjacency lists, never a sort-merge join."""
-    from codegraph_rust_spark.functions.nsw import ann_hnsw_layered
+    from codegraph_rust_spark.functions.nsw import (
+        _beam_visited,
+        _hnsw_entry,
+        _hnsw_layer_plan,
+    )
 
-    p = _plan(ann_hnsw_layered(spark, SF, _truncate=False))
+    e, en, q = _search_inputs(spark, [0])
+    layers = _hnsw_layer_plan(e, lambda name, build: build())
+    p = _plan(_beam_visited(en, q, _hnsw_entry(e), layers, lambda d: d))
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
 
