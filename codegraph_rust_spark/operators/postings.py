@@ -353,19 +353,10 @@ def encode_partials(
         else None
     )
 
-    import os as _os
-    _debug = _os.environ.get("CGRS_DEBUG_TIMING") == "1"
-
     def run(batches):
-        import sys as _sys
-        import time as _time
-
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        _t0 = _time.time()
-        _py = 0.0
-        _n = 0
         acc_t: list = []
         acc_s: list = []
         acc_d: list = []
@@ -418,7 +409,6 @@ def encode_partials(
             )
 
         for rb in batches:
-            _tb = _time.time()
             if rb.num_rows == 0:
                 continue
             tid = rb.column(2)  # term_ids
@@ -453,23 +443,13 @@ def encode_partials(
             acc_tf.append(flat_tf)
             acc_dl.append(dls)
             acc_n += len(flat_t)
-            _n += len(flat_t)
             if acc_n >= block_chunk:
                 out = flush()
-                _py += _time.time() - _tb
                 if out is not None:
                     yield out
-            else:
-                _py += _time.time() - _tb
         out = flush()
         if out is not None:
             yield out
-        if _debug:
-            print(
-                f"CGRS_PARTIAL rows={_n} py_s={_py:.2f} "
-                f"wall_s={_time.time() - _t0:.2f}",
-                file=_sys.stderr, flush=True,
-            )
 
     cols = tokenized.select("doc_id", "doc_len", "term_ids", "tfs")
     return cols.mapInArrow(run, schema=PARTIALS_SCHEMA)
@@ -536,6 +516,20 @@ MERGED_SCHEMA = T.StructType(
 )
 
 
+MERGE_TASK_POSTINGS = 2_500_000  # merge-side memory cap, postings per task
+
+
+def merge_task_count(est_rows: int, slots: int) -> int:
+    """Task count of the posting-merge exchange: the data-sized chunk
+    count ``ceil(est_rows / MERGE_TASK_POSTINGS)`` rounded up to whole
+    waves of ``slots`` (``spark.sql.shuffle.partitions``, which every
+    session sets to its executor slot count).  Never below ``slots``,
+    always a multiple of it: a small build runs one task per slot, and a
+    big one runs full waves of tasks that each hold ≤2.5M postings."""
+    chunks = -(-max(1, est_rows) // MERGE_TASK_POSTINGS)
+    return -(-chunks // slots) * slots
+
+
 def merge_partials(
     partials: DataFrame, cfg: IndexConfig, est_rows: int | None = None
 ) -> DataFrame:
@@ -550,18 +544,12 @@ def merge_partials(
     flat-lined beyond 8 local cores on memory traffic)."""
     spark = partials.sparkSession
     block = cfg.block_size
-    est_rows = max(1, int(est_rows or 1))
-    # wave-quantized, data-sized partition count (see round-1 notes):
-    # cap ~2.5M postings per merge task, round up to a multiple of 64
-    n_part = max(
-        int(spark.conf.get("spark.sql.shuffle.partitions", "200")),
-        (est_rows + 2_500_000 - 1) // 2_500_000,
+    # any width hashes each (term_id, salt) to exactly one task, so the
+    # merged runs do not depend on the slot count
+    slots = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    parted = partials.repartition(
+        merge_task_count(est_rows or 1, slots), "term_id", "salt"
     )
-    n_part = ((n_part + 63) // 64) * 64
-    parted = partials.repartition(n_part, "term_id", "salt")
-
-    import os as _os
-    _debug = _os.environ.get("CGRS_DEBUG_TIMING") == "1"
 
     def _binary_flat(arr):
         """(uint8 values, int64 offsets) of an Arrow Binary column —
@@ -574,23 +562,15 @@ def merge_partials(
         return data, offs
 
     def run(batches):
-        import sys as _sys
-        import time as _time
-
         import pyarrow as pa
 
-        _t0 = _time.time()
-        _feed = 0.0
-        _tb = _time.time()
         terms: list = []
         salts: list = []
         ns: list = []
         streams: dict = {4: [], 5: []}  # col idx → [(data, offs)]
         doc_parts: list = []
         for rb in batches:
-            _feed += _time.time() - _tb
             if rb.num_rows == 0:
-                _tb = _time.time()
                 continue
             terms.append(rb.column(0).to_numpy())
             salts.append(rb.column(1).to_numpy())
@@ -598,7 +578,6 @@ def merge_partials(
             doc_parts.append(_binary_flat(rb.column(3)))
             streams[4].append(_binary_flat(rb.column(4)))
             streams[5].append(_binary_flat(rb.column(5)))
-            _tb = _time.time()
         if not terms:
             return
         term = np.concatenate(terms)
@@ -653,12 +632,6 @@ def merge_partials(
         _encode_final_chunk(
             rid2, term_of_rid, salt_of_rid, docs2, tfs2, dls2, block, out
         )
-        if _debug:
-            print(
-                f"CGRS_MERGE postings={len(docs2)} feed_wait_s={_feed:.2f} "
-                f"wall_s={_time.time() - _t0:.2f}",
-                file=_sys.stderr, flush=True,
-            )
         from pyspark.sql.pandas.types import to_arrow_schema
 
         a_schema = to_arrow_schema(MERGED_SCHEMA)

@@ -37,6 +37,7 @@ from ..operators.postings import (
     build_postings,
     dictionary_stage,
     explode_tf,
+    merge_task_count,
     tokenize_stage,
 )
 from ..sources.catalog import Catalog
@@ -181,8 +182,9 @@ def derived_stages(
     dictionary = cat.read(spark, DICT)
 
     if not done.get(POSTINGS):
+        est_rows = int(n_docs * max(avgdl, 1.0) * 0.85)
+
         def _postings():
-            est_rows = int(n_docs * max(avgdl, 1.0) * 0.85)
             post = build_postings(tokenized, dictionary, cfg, est_rows=est_rows)
             # worker-direct partitioned write: encoded rows stream from
             # the merge tasks straight into tbucket=X parquet files
@@ -204,6 +206,14 @@ def derived_stages(
                     os.path.join(cat.path(POSTINGS), "tbucket=0")
                 )
         timed(POSTINGS, _postings)
+        # the merge width merge_partials used, so a build explains its
+        # own task count without a rerun
+        metrics["stages"][POSTINGS].update(
+            est_rows=est_rows,
+            merge_tasks=merge_task_count(
+                est_rows, int(spark.conf.get("spark.sql.shuffle.partitions"))
+            ),
+        )
 
     total = write_lineage(cat, spark, int(stats_row["input_fingerprint"] or 0))
     return {"n_docs": n_docs, "avgdl": avgdl, "total_postings": total}

@@ -1,5 +1,6 @@
 """Index-build invariants (FIXTURES.md §5 #1,#3) + resume correctness (#7)."""
 
+import json
 import os
 import shutil
 
@@ -153,22 +154,79 @@ def test_postings_partitioning_invariance(spark, tiny_corpus, tiny_index,
     from codegraph_rust_spark.config import IndexConfig
     from codegraph_rust_spark.plans.build import build_index
 
-    def decoded(index_dir):
-        post = spark.read.parquet(os.path.join(index_dir, "postings"))
-        tuples = []
-        for r in post.collect():
-            docs = delta_decode_blocked(decode_u64(bytes(r["doc_payload"])), 128)
-            tfs = decode_u32(bytes(r["tf_payload"]))
-            dls = decode_u32(bytes(r["dl_payload"]))
-            for d, t, l in zip(docs.tolist(), tfs.tolist(), dls.tolist()):
-                tuples.append((r["term_id"], r["salt"], r["df"], d, t, l))
-        tuples.sort()
-        return tuples
-
-    base = decoded(tiny_index["dir"])
+    base = _decoded_postings(spark, tiny_index["dir"])
     other_dir = str(tmp_path_factory.mktemp("idx") / "tiny_index_p3")
     pages = spark.read.parquet(os.path.join(tiny_corpus, "pages.parquet"))
     cfg = IndexConfig(input_partitions=3, salt_df_threshold=200, max_salts=4)
     build_index(spark, pages, other_dir, cfg, resume=False)
-    assert decoded(other_dir) == base
+    assert _decoded_postings(spark, other_dir) == base
+    shutil.rmtree(other_dir, ignore_errors=True)
+
+
+def _decoded_postings(spark, index_dir):
+    """Every (term_id, salt, df, doc, tf, dl) tuple of an index, sorted."""
+    tuples = []
+    for r in spark.read.parquet(os.path.join(index_dir, "postings")).collect():
+        docs = delta_decode_blocked(decode_u64(bytes(r["doc_payload"])), 128)
+        tfs = decode_u32(bytes(r["tf_payload"]))
+        dls = decode_u32(bytes(r["dl_payload"]))
+        for d, t, l in zip(docs.tolist(), tfs.tolist(), dls.tolist()):
+            tuples.append((r["term_id"], r["salt"], r["df"], d, t, l))
+    tuples.sort()
+    return tuples
+
+
+def test_merge_task_count_is_slot_quantized():
+    """The posting-merge width is the data-sized chunk count (≤2.5M
+    postings a task) rounded up to whole waves of the slots."""
+    from codegraph_rust_spark.operators.postings import (
+        MERGE_TASK_POSTINGS,
+        merge_task_count,
+    )
+
+    assert merge_task_count(1, 2) == 2
+    assert merge_task_count(5_000_001, 2) == 4
+    assert merge_task_count(51_000_000, 2) == 22
+    assert merge_task_count(51_000_000, 8) == 24
+    for slots in (1, 2, 3, 4, 8, 16, 64):
+        for est in (1, 2_499_999, 2_500_000, 2_500_001, 7_777_777,
+                    51_000_000, 10**9):
+            n = merge_task_count(est, slots)
+            chunks = -(-est // MERGE_TASK_POSTINGS)
+            assert n >= slots
+            assert n % slots == 0
+            assert n >= chunks
+            # whole waves, not one wave more than the chunks need
+            assert n - slots < chunks
+    # est_rows of the tiny test corpus and of the 1,000-page benchmark
+    # corpus (~0.15M each): one merge task per slot
+    for est in (143_871, 151_902):
+        for slots in (2, 4, 8):
+            assert merge_task_count(est, slots) == slots
+
+
+def test_merge_width_does_not_change_postings(spark, tiny_corpus, tiny_index,
+                                              tmp_path_factory):
+    """The merge exchange hashes each (term_id, salt) to exactly one
+    task at any width, so a build at 3 shuffle partitions decodes to
+    the same tuples as the fixture's build at 8, and each build's
+    metrics record the width it ran."""
+    from codegraph_rust_spark.plans.build import build_index
+
+    assert tiny_index["metrics"]["stages"]["postings"]["merge_tasks"] == 8
+    other_dir = str(tmp_path_factory.mktemp("idx") / "tiny_index_merge3")
+    pages = spark.read.parquet(os.path.join(tiny_corpus, "pages.parquet"))
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        m = build_index(spark, pages, other_dir, tiny_index["cfg"], resume=False)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    with open(os.path.join(other_dir, "metrics.json")) as f:
+        assert json.load(f)["stages"]["postings"] == m["stages"]["postings"]
+    assert m["stages"]["postings"]["merge_tasks"] == 3
+    assert m["stages"]["postings"]["est_rows"] > 0
+    assert _decoded_postings(spark, other_dir) == _decoded_postings(
+        spark, tiny_index["dir"]
+    )
     shutil.rmtree(other_dir, ignore_errors=True)
